@@ -84,6 +84,21 @@ def _run(a: ar.Arena, cfg: RenderConfig, prio: dict, budget: int) -> str:
     return find_largest_render_under_budget(po, cfg, budget)
 
 
+def render_conversation(roles, texts, tools, cfg: RenderConfig, prio: dict,
+                        budget: int,
+                        pre_sampled_indices: list[int] | None = None,
+                        pre_sampled_total: int | None = None) -> str:
+    """Preview of the transcript document {"turns": [...]} given as
+    parallel role/text/tool columns, with the configs from make_configs.
+    The pre_sampled_* arguments are build_conversation_arena's: pass them
+    when the sampler keep-set was applied upstream."""
+    a = ar.build_conversation_arena(
+        roles, texts, tools, prio["array_max_items"], prio["sampler"],
+        pre_sampled_indices=pre_sampled_indices,
+        pre_sampled_total=pre_sampled_total)
+    return _run(a, cfg, prio, budget)
+
+
 def summarize(text: str | bytes, *, format: str = "auto",
               style: str = "default", character_budget: int | None = None,
               skew: str = "balanced", input_format: str = "json",

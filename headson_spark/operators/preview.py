@@ -30,10 +30,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from ..kernel.api import make_configs
-from ..kernel import arena as ar
-from ..kernel.order import build_order
-from ..kernel.render import find_largest_render_under_budget
+from ..kernel.api import make_configs, render_conversation
 
 PREVIEW_SCHEMA = ("conv_id string, preview string, n_turns int, "
                   "n_chars bigint, preview_bytes int")
@@ -47,13 +44,7 @@ def _summarize_conv(pdf: pd.DataFrame, cfg, prio, budget) -> tuple:
     texts = pdf["text"].tolist()
     tools = pdf["tool"].tolist()
     # turns array sampled before building nodes (pre-parse limit pushdown)
-    a = ar.build_conversation_arena(roles, texts, tools,
-                                    prio["array_max_items"],
-                                    prio["sampler"])
-    po = build_order(a, prio["max_string_graphemes"],
-                     prefer_tail_arrays=prio["prefer_tail_arrays"],
-                     max_pops=max(budget, 1), lazy=True)
-    preview = find_largest_render_under_budget(po, cfg, budget)
+    preview = render_conversation(roles, texts, tools, cfg, prio, budget)
     n_chars = int(sum(len(t) for t in texts))
     return (len(roles), n_chars, preview)
 
@@ -92,14 +83,8 @@ def make_preview_fn(budget: int = 500, style: str = "default",
             out = {"conv_id": [], "preview": [], "n_turns": [],
                    "n_chars": [], "preview_bytes": []}
             for s, e in zip(starts, ends):
-                a = ar.build_conversation_arena(
-                    roles[s:e], texts[s:e], tools[s:e],
-                    prio["array_max_items"], prio["sampler"])
-                po = build_order(
-                    a, prio["max_string_graphemes"],
-                    prefer_tail_arrays=prio["prefer_tail_arrays"],
-                    max_pops=max(budget, 1), lazy=True)
-                preview = find_largest_render_under_budget(po, cfg, budget)
+                preview = render_conversation(
+                    roles[s:e], texts[s:e], tools[s:e], cfg, prio, budget)
                 out["conv_id"].append(conv[s])
                 out["preview"].append(preview)
                 out["n_turns"].append(e - s)
@@ -192,16 +177,10 @@ def make_presampled_preview_fn(budget: int, style: str, skew: str,
                     s += 1
                 else:  # defensive: sentinel missing, count what we have
                     total = e - s
-                a = ar.build_conversation_arena(
-                    roles[s:e], texts[s:e], tools[s:e],
-                    prio["array_max_items"], prio["sampler"],
+                preview = render_conversation(
+                    roles[s:e], texts[s:e], tools[s:e], cfg, prio, budget,
                     pre_sampled_indices=[int(x) for x in tidx[s:e]],
                     pre_sampled_total=total)
-                po = build_order(
-                    a, prio["max_string_graphemes"],
-                    prefer_tail_arrays=prio["prefer_tail_arrays"],
-                    max_pops=max(budget, 1), lazy=True)
-                preview = find_largest_render_under_budget(po, cfg, budget)
                 if chars_all is not None:
                     n_chars = chars_all - loser_chars.get(cid, 0)
                 else:

@@ -4,16 +4,19 @@ Pipeline:
 
     readStream (file/rate/Iceberg source)
       -> withWatermark("ts", late_gap)
-      -> groupBy(conv_id).applyInPandasWithState(merge+preview kernel)
+      -> groupBy(group key), applyInPandasWithState: merge+preview kernel
       -> foreachBatch idempotent keyed sink (exactly-once)
 
-Per-conversation state holds the merged turn map (the "stateful join" on
-(conv_id, turn_idx): late/duplicate turns merge last-write-wins by ts),
-with stable turn ordering enforced before budget allocation. Conversation
-sessions close via event-time timeout (session-window semantics hosted
-inside the stateful operator — declarative session_window cannot hold
-arbitrary state). Checkpointed and resumable; replays are idempotent
-because the sink MERGEs on conv_id and skips already-committed batch ids.
+The group key is pmod(xxhash64(conv_id), n_buckets) or conv_id itself;
+either way one function merges and renders every conversation in the
+group. Per-conversation state holds the merged turn map (the "stateful
+join" on (conv_id, turn_idx): late/duplicate turns merge last-write-wins
+by ts), with stable turn ordering enforced before budget allocation.
+Conversation sessions close via event-time timeout (session-window
+semantics hosted inside the stateful operator — declarative
+session_window cannot hold arbitrary state). Checkpointed and resumable;
+replays are idempotent because the sink MERGEs on conv_id and skips
+already-committed batch ids.
 
 Scale notes:
 - state per conversation is O(array_cap) once the turn cap is applied;
@@ -31,28 +34,18 @@ from typing import Any, Iterator, Tuple
 
 import pandas as pd
 
-from ..kernel.api import make_configs
-from ..kernel import arena as ar
-from ..kernel.order import build_order
-from ..kernel.render import find_largest_render_under_budget
+from ..kernel.api import make_configs, render_conversation
 
 OUTPUT_SCHEMA = ("conv_id string, preview string, n_turns int, "
                  "last_ts timestamp, final boolean")
-STATE_SCHEMA = "turns_json string, max_ts_us long, emitted_version int"
 
 
 def _render_from_turn_map(turn_map: dict, cfg, prio, budget) -> str:
     idxs = sorted(turn_map, key=int)
-    roles = [turn_map[i][0] for i in idxs]
-    texts = [turn_map[i][1] for i in idxs]
-    tools = [turn_map[i][2] for i in idxs]
-    a = ar.build_conversation_arena(roles, texts, tools,
-                                    prio["array_max_items"],
-                                    prio["sampler"])
-    po = build_order(a, prio["max_string_graphemes"],
-                     prefer_tail_arrays=prio["prefer_tail_arrays"],
-                     max_pops=max(budget, 1), lazy=True)
-    return find_largest_render_under_budget(po, cfg, budget)
+    return render_conversation([turn_map[i][0] for i in idxs],
+                               [turn_map[i][1] for i in idxs],
+                               [turn_map[i][2] for i in idxs],
+                               cfg, prio, budget)
 
 
 # --------------------------------------------------------------------------
@@ -131,36 +124,17 @@ def _render_bounded(st: dict, cfg, prio, budget,
         if r in keepset:
             picked.append((r, v))
     picked.sort()
-    a = ar.build_conversation_arena(
+    return render_conversation(
         [v[0] for _, v in picked], [v[1] for _, v in picked],
-        [v[2] for _, v in picked],
-        prio["array_max_items"], prio["sampler"],
+        [v[2] for _, v in picked], cfg, prio, budget,
         pre_sampled_indices=[r for r, _ in picked],
         pre_sampled_total=total)
-    po = build_order(a, prio["max_string_graphemes"],
-                     prefer_tail_arrays=prio["prefer_tail_arrays"],
-                     max_pops=max(budget, 1), lazy=True)
-    return find_largest_render_under_budget(po, cfg, budget)
 
 
 def _st_new() -> dict:
     # v counts completed merge rounds for this conversation (drives the
     # every_k emission policy)
     return {"b": bytearray(), "k": {}, "mx": 0, "n": 0, "v": 0}
-
-
-def _st_to_jsonable(st: dict) -> dict:
-    import base64
-    return {"b": base64.b64encode(bytes(st["b"])).decode("ascii"),
-            "k": st["k"], "mx": st["mx"], "n": st["n"],
-            "v": st.get("v", 0)}
-
-
-def _st_from_jsonable(d: dict) -> dict:
-    import base64
-    d["b"] = bytearray(base64.b64decode(d["b"]))
-    d.setdefault("v", 0)
-    return d
 
 
 def _should_emit(policy: str, every: int, version: int) -> bool:
@@ -175,28 +149,6 @@ def _should_emit(policy: str, every: int, version: int) -> bool:
     if policy == "every_k":
         return version % max(every, 1) == 0
     raise ValueError(f"unknown emit_policy: {policy!r}")
-
-
-def _st_encode(st: dict) -> str:
-    return json.dumps(_st_to_jsonable(st))
-
-
-def _st_decode(blob: str) -> dict:
-    return _st_from_jsonable(json.loads(blob))
-
-
-def _st_merge_rows(st: dict, pdf: pd.DataFrame,
-                   max_idx: int = 100_000) -> bool:
-    """LWW-merge a micro-batch slice into bounded state; True if any
-    content or count changed. (Column-extraction wrapper around
-    _st_merge_cols — the bucketed engine extracts columns once per
-    batch and calls _st_merge_cols per conversation slice instead.)"""
-    ts_us_arr = (pdf["ts"].to_numpy("datetime64[ns]")
-                 .astype("int64") // 1_000)
-    return _st_merge_cols(st, pdf["turn_idx"].tolist(),
-                          pdf["role"].tolist(), pdf["text"].tolist(),
-                          pdf["tool"].tolist(), ts_us_arr.tolist(),
-                          max_idx)
 
 
 def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list,
@@ -231,105 +183,6 @@ def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list,
     return changed
 
 
-def make_stateful_preview_fn(budget: int = 500, style: str = "default",
-                             skew: str = "balanced", fmt: str = "json",
-                             session_gap_ms: int = 600_000,
-                             max_turns_in_state: int = 100_000,
-                             emit_policy: str = "on_change",
-                             emit_every: int = 8):
-    """Build the applyInPandasWithState function (group key = conv_id).
-
-    Balanced/head skew uses budget-bounded state (O(cap) turn contents +
-    a seen-bitmap — see the module helpers); tail skew keeps the full
-    turn map because tail kept-ness depends on the final length.
-
-    emit_policy controls intermediate emissions (final session-close
-    emissions always fire): "on_change" re-renders every changed
-    conversation per micro-batch; "on_close" skips ALL intermediate
-    renders (one render per conversation at session close — the
-    throughput mode when only final previews matter); "every_k" renders
-    a changed conversation only on its every emit_every-th CHANGED
-    merge round (identical counting in the per-conv, bucketed and TWS
-    engines). All policies converge to identical final (final=True)
-    rows.
-    """
-    if emit_policy not in ("on_change", "on_close", "every_k"):
-        raise ValueError(f"unknown emit_policy: {emit_policy!r}")
-    cfg, prio, budget = make_configs(format=fmt, style=style,
-                                     character_budget=budget, skew=skew)
-    keep = _keepset(prio, budget)
-    keepset = set(keep) if keep is not None else None
-
-    def render(st: dict) -> str:
-        if keep is not None:
-            return _render_bounded(st, cfg, prio, budget, keepset)
-        return _render_from_turn_map(st["k"], cfg, prio, budget)
-
-    def n_turns_of(st: dict) -> int:
-        return st["n"] if keep is not None else len(st["k"])
-
-    def fn(key: Tuple[str], pdf_iter: Iterator[pd.DataFrame],
-           state: Any) -> Iterator[pd.DataFrame]:
-        conv_id = key[0]
-        if state.hasTimedOut:
-            # session closes: final emission, then evict state
-            blob, max_ts_us, version = state.get
-            st = _st_decode(blob)
-            preview = render(st)
-            state.remove()
-            yield pd.DataFrame({
-                "conv_id": [conv_id], "preview": [preview],
-                "n_turns": [n_turns_of(st)],
-                "last_ts": [pd.Timestamp(max_ts_us, unit="us", tz="UTC")],
-                "final": [True]})
-            return
-
-        if state.exists:
-            blob, max_ts_us, version = state.get
-            st = _st_decode(blob)
-            st["mx"] = max_ts_us
-        else:
-            st, version = _st_new(), 0
-
-        changed = False
-        for pdf in pdf_iter:
-            changed = (_st_merge_rows(st, pdf, max_turns_in_state)
-                       or changed)
-        if changed:
-            # st["v"] counts CHANGED merge rounds only — the every_k
-            # policy gates on it, matching the bucketed engine and the
-            # TWS processor exactly (a data-bearing round that changes
-            # nothing does not advance the emission cadence)
-            st["v"] = st.get("v", 0) + 1
-        if keep is not None:
-            _prune_kept(st, keep)
-        elif len(st["k"]) > max_turns_in_state:
-            # tail path hard cap against degenerate conversations
-            # (reference SAFETY_CAP precedent, scoring.rs:3)
-            ks = sorted(st["k"], key=int)[:max_turns_in_state]
-            st["k"] = {k: st["k"][k] for k in ks}
-
-        state.update((_st_encode(st), st["mx"], version + 1))
-        # session-window closure: event-time timeout at max_ts + gap.
-        # Clamp past the watermark: a late turn for an already-expired
-        # session would otherwise compute a deadline in the past and
-        # Spark rejects it (INVALID_TIMEOUT_TIMESTAMP); clamping closes
-        # the session on the next micro-batch instead.
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-            max(st["mx"] // 1000 + session_gap_ms, wm_ms + 1))
-
-        if changed and _should_emit(emit_policy, emit_every, st["v"]):
-            preview = render(st)
-            yield pd.DataFrame({
-                "conv_id": [conv_id], "preview": [preview],
-                "n_turns": [n_turns_of(st)],
-                "last_ts": [pd.Timestamp(st["mx"], unit="us", tz="UTC")],
-                "final": [False]})
-
-    return fn
-
-
 BUCKET_STATE_SCHEMA = "blob binary, n_convs int"
 
 
@@ -362,27 +215,36 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
                              max_turns_in_state: int = 100_000,
                              emit_policy: str = "on_change",
                              emit_every: int = 8):
-    """Bucketed state coalescing: the stateful group key is
-    pmod(xxhash64(conv_id), B) instead of conv_id, so ONE
-    applyInPandasWithState group invocation carries ~n_convs/B
-    conversations. The per-group Python/Arrow/state-store machinery —
-    measured as the dominant cost of the per-conversation engine — is
-    amortized ~(n_convs/B)x; merge/render logic is identical.
+    """Build the applyInPandasWithState function (state schema
+    BUCKET_STATE_SCHEMA, output OUTPUT_SCHEMA).
 
-    Trade-off: the bucket's state blob is rewritten whenever any of its
-    conversations change (write amplification ~bucket size). B tunes
-    between per-group overhead (B too big) and amplification (B too
-    small). Budget-bounded per-conversation state (O(cap) contents +
-    seen-bitmap) keeps the blob small even for mega-conversations. The
-    per-conversation engine remains the semantics reference; the gated
-    transformWithStateInPandas path removes the trade-off entirely
-    (per-conv state granularity without per-group overhead).
+    The function ignores its group key and keeps one state dict per
+    conversation inside the group's state blob, so any grouping key
+    works provided each conversation falls in exactly one group:
+    conv_id itself (one conversation per group) or
+    pmod(xxhash64(conv_id), B), where ONE group invocation carries
+    ~n_convs/B conversations and the per-group Python/Arrow/state-store
+    machinery is amortized ~(n_convs/B)x. Sessions close per
+    conversation: the group's timeout is armed at its earliest deadline
+    and re-armed for the survivors.
 
-    emit_policy: see make_stateful_preview_fn — "on_change" (default),
-    "on_close" (no intermediate renders; with bounded state the render
-    is the dominant per-batch cost, so this is the bulk-throughput
-    mode), "every_k" (render every emit_every-th changed round per
-    conversation). Final timeout emissions are policy-independent.
+    Trade-off of coalescing: a group's state blob is rewritten whenever
+    any of its conversations change (write amplification ~group size).
+    B tunes between per-group overhead (B too big) and amplification (B
+    too small). Balanced/head skew keeps budget-bounded state per
+    conversation (O(cap) contents + seen-bitmap — see the module
+    helpers), which keeps the blob small even for mega-conversations;
+    tail skew keeps the full turn map because tail kept-ness depends on
+    the final length.
+
+    emit_policy controls intermediate emissions (final session-close
+    emissions always fire): "on_change" re-renders every changed
+    conversation per micro-batch; "on_close" skips ALL intermediate
+    renders (one render per conversation at session close — the
+    throughput mode when only final previews matter); "every_k" renders
+    a changed conversation only on its every emit_every-th CHANGED
+    merge round. All policies converge to identical final (final=True)
+    rows.
     """
     if emit_policy not in ("on_change", "on_close", "every_k"):
         raise ValueError(f"unknown emit_policy: {emit_policy!r}")
@@ -502,63 +364,45 @@ def streaming_previews(stream_df, *, budget: int = 500,
                        emit_every: int = 8):
     """stream_df: streaming DataFrame with the transcript schema.
 
-    n_buckets engages bucketed state coalescing (the throughput path —
-    per-group applyInPandasWithState overhead amortized across
-    ~n_convs/n_buckets conversations per group); None selects the
-    per-conversation reference engine. Both produce identical rows.
+    n_buckets picks the stateful group key: a number groups by
+    pmod(xxhash64(conv_id), n_buckets) (bucketed state coalescing, the
+    throughput path — per-group applyInPandasWithState overhead is
+    amortized across ~n_convs/n_buckets conversations per group); None
+    groups by conv_id. Both run make_bucketed_preview_fn and produce
+    identical rows.
 
     emit_policy: "on_change" (default) / "on_close" / "every_k" — see
-    make_stateful_preview_fn. All policies agree on final (final=True)
+    make_bucketed_preview_fn. All policies agree on final (final=True)
     rows; on_close trades intermediate visibility for throughput.
 
-    CHECKPOINT COMPATIBILITY: round 2 changed BOTH the stateful group
-    key (bucketed coalescing by pmod(xxhash64(conv_id), n_buckets) is
-    now the default) and the per-conversation state blob layout
-    (turn-map JSON -> base64 seen-bitmap + bounded keep-set dict).
-    Checkpoints written by the round-1 engine fail Spark's state
-    key/schema validation (or _st_decode) on resume — resume pre-round-2
-    jobs with a NEW checkpoint dir, or pass n_buckets=None to keep the
-    per-conversation grouping explicitly (its round-1 blobs are still
-    incompatible). The same applies when changing n_buckets between
-    runs: the bucket count is baked into the state key space. Round 5
-    changed the BUCKETED blob from JSON+base64 (string column) to pickle
-    (binary column) — Spark's state value-schema validation rejects
-    pre-round-5 bucketed checkpoints on resume; start bucketed jobs with
-    a NEW checkpoint dir after the upgrade (the per-conversation
-    engine's string STATE_SCHEMA is unchanged). Round 3
-    additionally widened the TWS engine's META_SCHEMA from
-    'max_ts_us long' to 'max_ts_us long, rounds int' (emit-policy round
-    counter) — TWS checkpoints written before that change fail Spark's
-    state VALUE-schema validation on resume (the validation runs before
-    the processor sees the row, so no in-processor fallback can help);
-    resume pre-round-3 TWS jobs with a NEW checkpoint dir too.
+    CHECKPOINT COMPATIBILITY: the group key and the state schema are
+    baked into a checkpoint, so resume with a NEW checkpoint dir after
+    any of these changes:
+    - changing n_buckets (including to or from None) between runs;
+    - upgrading a pre-round-2 job (conv_id key, turn-map JSON blob);
+    - upgrading a pre-round-5 bucketed job (the blob moved from a
+      JSON+base64 string column to a pickled binary column);
+    - upgrading a per-conversation (n_buckets=None) job written before
+      the per-conversation engine was folded into this one: its state
+      was a JSON string ('turns_json string, max_ts_us long,
+      emitted_version int') and is now BUCKET_STATE_SCHEMA's pickled
+      binary blob, which Spark's state value-schema validation rejects
+      on resume.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if n_buckets:
-        fn = make_bucketed_preview_fn(budget, style, skew, fmt,
-                                      session_gap_ms,
-                                      emit_policy=emit_policy,
-                                      emit_every=emit_every)
-        return (stream_df
-                .withWatermark("ts", watermark)
-                .withColumn("_bucket",
-                            F.pmod(F.xxhash64("conv_id"),
-                                   F.lit(n_buckets)).cast("long"))
-                .groupBy("_bucket")
-                .applyInPandasWithState(
-                    fn, OUTPUT_SCHEMA, BUCKET_STATE_SCHEMA, "update",
-                    GroupStateTimeout.EventTimeTimeout))
-
-    fn = make_stateful_preview_fn(budget, style, skew, fmt, session_gap_ms,
+    fn = make_bucketed_preview_fn(budget, style, skew, fmt, session_gap_ms,
                                   emit_policy=emit_policy,
                                   emit_every=emit_every)
-    return (stream_df
-            .withWatermark("ts", watermark)
-            .groupBy("conv_id")
+    df = stream_df.withWatermark("ts", watermark)
+    if n_buckets:
+        df = df.withColumn("_bucket", F.pmod(F.xxhash64("conv_id"),
+                                             F.lit(n_buckets)).cast("long"))
+    return (df
+            .groupBy("_bucket" if n_buckets else "conv_id")
             .applyInPandasWithState(
-                fn, OUTPUT_SCHEMA, STATE_SCHEMA, "update",
+                fn, OUTPUT_SCHEMA, BUCKET_STATE_SCHEMA, "update",
                 GroupStateTimeout.EventTimeTimeout))
 
 
@@ -674,8 +518,8 @@ def run_stream(spark, source_dir: str, sink: KeyedParquetSink,
     """File-source streaming job (swap readStream.format('iceberg') for an
     Iceberg catalog deployment — same plan otherwise).
 
-    checkpoint_dir must be NEW when upgrading across the round-2 state
-    format change or when changing n_buckets — see streaming_previews."""
+    checkpoint_dir must be NEW when changing n_buckets or upgrading
+    across a state format change — see streaming_previews."""
     schema = ("conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
     reader = (spark.readStream.schema(schema))

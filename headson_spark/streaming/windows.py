@@ -35,10 +35,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..kernel.api import make_configs
-from ..kernel import arena as ar
-from ..kernel.order import build_order
-from ..kernel.render import find_largest_render_under_budget
+from ..kernel.api import make_configs, render_conversation
 
 
 def make_render_udf(budget: int = 500, style: str = "default",
@@ -59,15 +56,10 @@ def make_render_udf(budget: int = 500, style: str = "default",
             for r in items:
                 merged[r["turn_idx"]] = (r["role"], r["text"], r["tool"])
             idxs = sorted(merged)
-            a = ar.build_conversation_arena(
+            out.append(render_conversation(
                 [merged[i][0] for i in idxs],
                 [merged[i][1] for i in idxs],
-                [merged[i][2] for i in idxs],
-                prio["array_max_items"], prio["sampler"])
-            po = build_order(a, prio["max_string_graphemes"],
-                             prefer_tail_arrays=prio["prefer_tail_arrays"],
-                             max_pops=max(budget_, 1))
-            out.append(find_largest_render_under_budget(po, cfg, budget_))
+                [merged[i][2] for i in idxs], cfg, prio, budget_))
         return pd.Series(out)
 
     return render_turns
@@ -95,17 +87,12 @@ def make_presampled_render_udf(budget: int = 500, style: str = "default",
             for r in items:
                 merged[r["turn_idx"]] = (r["role"], r["text"], r["tool"])
             idxs = sorted(merged)
-            a = ar.build_conversation_arena(
+            out.append(render_conversation(
                 [merged[i][0] for i in idxs],
                 [merged[i][1] for i in idxs],
-                [merged[i][2] for i in idxs],
-                prio["array_max_items"], prio["sampler"],
+                [merged[i][2] for i in idxs], cfg, prio, budget_,
                 pre_sampled_indices=idxs,
-                pre_sampled_total=max(int(tot), len(idxs)))
-            po = build_order(a, prio["max_string_graphemes"],
-                             prefer_tail_arrays=prio["prefer_tail_arrays"],
-                             max_pops=max(budget_, 1), lazy=True)
-            out.append(find_largest_render_under_budget(po, cfg, budget_))
+                pre_sampled_total=max(int(tot), len(idxs))))
         return pd.Series(out)
 
     return render_kept

@@ -8,8 +8,8 @@ import zipfile
 
 def build(out: str = "dist/headson_spark.zip") -> str:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    os.makedirs(os.path.join(root, "dist"), exist_ok=True)
     out_path = os.path.join(root, out)
+    os.makedirs(os.path.dirname(out_path), exist_ok=True)
     pkg = os.path.join(root, "headson_spark")
     with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as z:
         for dirpath, _dirnames, filenames in os.walk(pkg):

@@ -2,7 +2,8 @@
 
 Reads a slice of the cached bench transcripts, groups by conv_id exactly
 like the mapInPandas flush path, and times/profiles the kernel loop:
-build_conversation_arena -> build_order(lazy) -> budget binary search.
+kernel.api.render_conversation (arena -> lazy order -> budget binary
+search).
 
 Usage: python scripts/profile_kernel.py [n_turns] [--cprofile]
 """
@@ -18,10 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np
 import pyarrow.dataset as ds
 
-from headson_spark.kernel.api import make_configs
-from headson_spark.kernel import arena as ar
-from headson_spark.kernel.order import build_order
-from headson_spark.kernel.render import find_largest_render_under_budget
+from headson_spark.kernel.api import make_configs, render_conversation
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 200_000
 BUDGET = 500
@@ -46,13 +44,8 @@ def main():
     def run():
         out = 0
         for s, e in zip(starts, ends):
-            a = ar.build_conversation_arena(
-                roles[s:e], texts[s:e], tools[s:e],
-                prio["array_max_items"], prio["sampler"])
-            po = build_order(a, prio["max_string_graphemes"],
-                             prefer_tail_arrays=prio["prefer_tail_arrays"],
-                             max_pops=max(budget, 1), lazy=True)
-            preview = find_largest_render_under_budget(po, cfg, budget)
+            preview = render_conversation(roles[s:e], texts[s:e],
+                                          tools[s:e], cfg, prio, budget)
             out += len(preview)
         return out
 

@@ -1,5 +1,8 @@
 """spark-submit entry point for the streaming preview job.
 
+Build the zip with `python scripts/package.py` first; it is not checked
+in, and a stale one would ship old code. Then:
+
     spark-submit --py-files dist/headson_spark.zip \
         scripts/submit_preview_job.py \
         --input <transcript parquet dir or Iceberg table> \

@@ -79,6 +79,15 @@ def test_stream_matches_batch_exactly_once(spark, late_stream, tmp_path,
 
 
 def test_stream_resume_from_checkpoint(spark, late_stream, tmp_path):
+    _check_resume(spark, late_stream, tmp_path, n_buckets=512)
+
+
+def test_stream_resume_from_checkpoint_per_conv(spark, late_stream,
+                                                tmp_path):
+    _check_resume(spark, late_stream, tmp_path, n_buckets=None)
+
+
+def _check_resume(spark, late_stream, tmp_path, n_buckets):
     src, chunks, full = late_stream
     sink = KeyedParquetSink(str(tmp_path / "sink2"))
     ckpt = str(tmp_path / "ckpt2")
@@ -89,7 +98,8 @@ def test_stream_resume_from_checkpoint(spark, late_stream, tmp_path):
     # phase 1: only first chunk available
     _write_chunk(src, 0, chunks[0])
     q = run_stream(spark, str(src), sink, ckpt, available_now=True,
-                   session_gap_ms=week_ms, watermark="2 days")
+                   session_gap_ms=week_ms, watermark="2 days",
+                   n_buckets=n_buckets)
     q.awaitTermination(300)
     committed_phase1 = sink.committed()
     assert committed_phase1, "phase 1 should commit at least one batch"
@@ -100,7 +110,8 @@ def test_stream_resume_from_checkpoint(spark, late_stream, tmp_path):
     # rows older than the checkpointed watermark are correctly dropped —
     # the equivalence claim only holds for in-watermark data
     q2 = run_stream(spark, str(src), sink, ckpt, available_now=True,
-                    session_gap_ms=week_ms, watermark="2 days")
+                    session_gap_ms=week_ms, watermark="2 days",
+                    n_buckets=n_buckets)
     q2.awaitTermination(300)
     got = {r["conv_id"]: r["preview"]
            for r in sink.read_latest(spark).collect()}
@@ -154,12 +165,20 @@ def test_sink_batch_metrics(spark, tmp_path):
 
 
 def test_bucketed_session_close_partial_bucket(spark, tmp_path):
-    """Bucketed engine: one conversation in a shared bucket times out
-    (session gap elapsed under the advancing watermark) and emits
-    final=True, while the other conversation in the SAME bucket stays
-    open — the bucket re-arms its timeout for the survivors."""
-    import pandas as pd
+    """One conversation in a shared bucket times out (session gap elapsed
+    under the advancing watermark) and emits final=True, while the other
+    conversation in the SAME bucket stays open — the bucket re-arms its
+    timeout for the survivors."""
+    _check_session_close(spark, tmp_path, n_buckets=1)
 
+
+def test_session_close_per_conv(spark, tmp_path):
+    """The same timeline grouped by conv_id: each conversation's group
+    times out on its own deadline."""
+    _check_session_close(spark, tmp_path, n_buckets=None)
+
+
+def _check_session_close(spark, tmp_path, n_buckets):
     day = 24 * 3600 * 1000
     t0 = pd.Timestamp("2026-01-01")  # tz-naive to match the source schema
 
@@ -184,7 +203,7 @@ def test_bucketed_session_close_partial_bucket(spark, tmp_path):
     q = run_stream(spark, str(src), sink, str(tmp_path / "close_ckpt"),
                    budget=500, available_now=True,
                    watermark="1 hour", session_gap_ms=day,
-                   max_files_per_trigger=1, n_buckets=1)
+                   max_files_per_trigger=1, n_buckets=n_buckets)
     q.awaitTermination(300)
 
     latest = {r["conv_id"]: r for r in sink.read_latest(spark).collect()}
@@ -254,6 +273,14 @@ def test_sink_merge_out_of_order_replay_idempotent(spark, tmp_path):
 def test_skewhot_conversation_streams_bounded(spark, tmp_path):
     """The 50k-turn hot conversation streams through the stateful kernel
     without blowing up: state is capped, the preview stays budgeted."""
+    _check_skewhot(spark, tmp_path, n_buckets=512)
+
+
+def test_skewhot_conversation_streams_bounded_per_conv(spark, tmp_path):
+    _check_skewhot(spark, tmp_path, n_buckets=None)
+
+
+def _check_skewhot(spark, tmp_path, n_buckets):
     cols = generate_rows(0.01, tags=["skewhot"])
     tbl = to_arrow(cols)
     src = tmp_path / "hot_src"
@@ -262,7 +289,7 @@ def test_skewhot_conversation_streams_bounded(spark, tmp_path):
     sink = KeyedParquetSink(str(tmp_path / "hot_sink"))
     q = run_stream(spark, str(src), sink, str(tmp_path / "hot_ckpt"),
                    budget=500, available_now=True,
-                   session_gap_ms=7 * 24 * 3600 * 1000)
+                   session_gap_ms=7 * 24 * 3600 * 1000, n_buckets=n_buckets)
     q.awaitTermination(600)
     rows = sink.read_latest(spark).collect()
     assert len(rows) == 1
@@ -362,7 +389,7 @@ def test_merge_rows_rejects_contract_violating_turn_idx():
     """Bitmap state guard: negative turn_idx must not corrupt the bitmap
     via Python negative indexing and a huge turn_idx must not balloon
     state; both rows are dropped, valid rows still merge."""
-    from headson_spark.streaming.engine import (_st_merge_rows, _st_new,
+    from headson_spark.streaming.engine import (_st_merge_cols, _st_new,
                                                 _bits_ranks)
     st = _st_new()
     pdf = pd.DataFrame({
@@ -373,7 +400,11 @@ def test_merge_rows_rejects_contract_violating_turn_idx():
         "ts": pd.Series([pd.Timestamp("2026-01-01")] * 4
                         + [pd.Timestamp("2026-01-02")],
                         dtype="datetime64[us]")})
-    changed = _st_merge_rows(st, pdf, max_idx=100_000)
+    ts_us = (pdf["ts"].to_numpy("datetime64[ns]").astype("int64")
+             // 1_000).tolist()
+    changed = _st_merge_cols(st, pdf["turn_idx"].tolist(),
+                             pdf["role"].tolist(), pdf["text"].tolist(),
+                             pdf["tool"].tolist(), ts_us, max_idx=100_000)
     assert changed
     total, _ = _bits_ranks(st["b"])
     assert total == 2  # only turns 0 and 1 registered
@@ -386,6 +417,14 @@ def test_on_close_policy_resumes_from_checkpoint(spark, tmp_path):
     """The on_close policy across a kill/restart: phase 1 merges turns
     (emitting nothing), the restarted query closes the session and emits
     the final row — equal to an uninterrupted run's final."""
+    _check_on_close_resume(spark, tmp_path, n_buckets=512)
+
+
+def test_on_close_policy_resumes_from_checkpoint_per_conv(spark, tmp_path):
+    _check_on_close_resume(spark, tmp_path, n_buckets=None)
+
+
+def _check_on_close_resume(spark, tmp_path, n_buckets):
     day = 24 * 3600 * 1000
     t0 = pd.Timestamp("2026-01-01")
     src = tmp_path / "ocr_src"
@@ -398,7 +437,7 @@ def test_on_close_policy_resumes_from_checkpoint(spark, tmp_path):
                        str(tmp_path / ckpt_name), budget=500,
                        available_now=True, watermark="1 hour",
                        session_gap_ms=day, max_files_per_trigger=1,
-                       emit_policy="on_close")
+                       n_buckets=n_buckets, emit_policy="on_close")
         q.awaitTermination(300)
         return sink
 
@@ -427,11 +466,11 @@ def test_on_close_policy_resumes_from_checkpoint(spark, tmp_path):
 
 def test_every_k_counts_changed_rounds_identically_across_engines(
         spark, tmp_path):
-    """The every_k cadence is defined over CHANGED merge rounds in all
-    three engines (per-conv, bucketed, TWS). A duplicate-only delivery
+    """The every_k cadence is defined over CHANGED merge rounds under
+    both groupings (per-conv and bucketed). A duplicate-only delivery
     (older ts, LWW loser -> changed=False) must not advance the cadence:
     with emit_every=2 the single intermediate emission lands on the
-    2nd CHANGED round (n_turns=2) in both Spark engines, and the
+    2nd CHANGED round (n_turns=2) under both groupings, and the
     intermediate rows are identical across them."""
     day = 24 * 3600 * 1000
     t0 = pd.Timestamp("2026-01-01")
