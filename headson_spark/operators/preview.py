@@ -14,6 +14,11 @@ same per-conversation result: rows of one conversation are contiguous after
 the sort, and the mapInPandas generator carries the trailing partial
 conversation across Arrow batch boundaries.
 
+One kernel (make_preview_fn) serves all three plans; they differ only in
+which rows reach it. The full plan sends every turn. The pushdown and
+tail-pushdown plans send the sampler keep-set plus one sentinel row per
+conversation carrying its pre-filter totals.
+
 Inside the kernel:
 - duplicate (conv_id, turn_idx) turns merge last-write-wins by ts (the
   north_rule stateful-join semantics, batch form)
@@ -36,63 +41,94 @@ PREVIEW_SCHEMA = ("conv_id string, preview string, n_turns int, "
                   "n_chars bigint, preview_bytes int")
 
 
-def _summarize_conv(pdf: pd.DataFrame, cfg, prio, budget) -> tuple:
-    # last-write-wins per turn_idx by ts, then stable order by turn_idx
-    pdf = (pdf.sort_values(["turn_idx", "ts"], kind="stable")
-              .drop_duplicates(subset=["turn_idx"], keep="last"))
-    roles = pdf["role"].tolist()
-    texts = pdf["text"].tolist()
-    tools = pdf["tool"].tolist()
-    # turns array sampled before building nodes (pre-parse limit pushdown)
-    preview = render_conversation(roles, texts, tools, cfg, prio, budget)
-    n_chars = int(sum(len(t) for t in texts))
-    return (len(roles), n_chars, preview)
-
-
 def make_preview_fn(budget: int = 500, style: str = "default",
                     skew: str = "balanced", fmt: str = "json"):
-    """Build the mapInPandas kernel closure (pickled to executors)."""
+    """Build the mapInPandas kernel closure (pickled to executors) that
+    every plan runs. Rows arrive sorted by (conv_id, turn_idx, ts).
+
+    A conversation run that starts with a sentinel row (turn_idx == -1 in
+    a batch that has the pushdown plans' `_total` column) carries the
+    sampler keep-set only: it renders as a pre-sampled arena, n_turns is
+    the sentinel's `_total` (the pre-filter length) and n_chars is the
+    sentinel's `_chars` (sum of text lengths over ALL delivered rows)
+    minus the LWW-loser lengths. Any other run is a whole conversation
+    and renders from its LWW-winning turns. Without the `_total` column
+    (full plan) a turn_idx == -1 row is an ordinary turn.
+
+    n_chars exactness on pushed-down input (matches the full plan: total
+    chars over the LWW-winning turns of the WHOLE conversation, not just
+    the kept set): losers on KEPT positions are visible here (the keep-set
+    filter passes every delivery of a kept turn_idx) and are subtracted
+    exactly; a duplicate delivery of a NON-kept turn is invisible
+    post-filter, so its loser length stays counted — n_chars is exact
+    whenever duplicate deliveries land on keep-set positions (or nowhere)
+    and an upper bound otherwise."""
     cfg, prio, budget = make_configs(format=fmt, style=style,
                                      character_budget=budget, skew=skew)
 
     import numpy as np
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # rows arrive sorted by (conv_id, turn_idx, ts) — see
-        # conversation_previews; concat(carry, batch) preserves that order
-        carry: pd.DataFrame | None = None
-
-        def flush(pdf: pd.DataFrame) -> pd.DataFrame:
-            conv = pdf["conv_id"].to_numpy()
-            tidx = pdf["turn_idx"].to_numpy()
-            # vectorized last-write-wins: rows are ts-ascending within
-            # (conv_id, turn_idx), so keep each run's last row
-            keep = np.empty(len(conv), dtype=bool)
-            keep[-1] = True
-            keep[:-1] = (conv[:-1] != conv[1:]) | (tidx[:-1] != tidx[1:])
-            if not keep.all():
-                pdf = pdf[keep]
-                conv = conv[keep]
-            roles = pdf["role"].tolist()
-            texts = pdf["text"].tolist()
-            tools = pdf["tool"].tolist()
-            # conversation boundaries on the sorted conv_id column
-            bounds = np.flatnonzero(conv[1:] != conv[:-1]) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(conv)]))
-            out = {"conv_id": [], "preview": [], "n_turns": [],
-                   "n_chars": [], "preview_bytes": []}
-            for s, e in zip(starts, ends):
+    def flush(pdf: pd.DataFrame) -> pd.DataFrame:
+        conv = pdf["conv_id"].to_numpy()
+        tidx = pdf["turn_idx"].to_numpy()
+        presampled = "_total" in pdf.columns
+        # vectorized last-write-wins: rows are ts-ascending within
+        # (conv_id, turn_idx), so keep each run's last row
+        keep = np.empty(len(conv), dtype=bool)
+        keep[-1] = True
+        keep[:-1] = (conv[:-1] != conv[1:]) | (tidx[:-1] != tidx[1:])
+        loser_chars: dict = {}
+        if not keep.all():
+            if "_chars" in pdf.columns:
+                lose = ~keep
+                for c, t in zip(conv[lose], pdf["text"].to_numpy()[lose]):
+                    if t is not None:
+                        loser_chars[c] = loser_chars.get(c, 0) + len(t)
+            pdf = pdf[keep]
+            conv = conv[keep]
+            tidx = tidx[keep]
+        roles = pdf["role"].tolist()
+        texts = pdf["text"].tolist()
+        tools = pdf["tool"].tolist()
+        if presampled:
+            totals = pdf["_total"].to_numpy()
+            charss = pdf["_chars"].to_numpy()
+        # conversation boundaries on the sorted conv_id column
+        bounds = np.flatnonzero(conv[1:] != conv[:-1]) + 1
+        starts = np.concatenate(([0], bounds))
+        ends = np.concatenate((bounds, [len(conv)]))
+        out = {"conv_id": [], "preview": [], "n_turns": [],
+               "n_chars": [], "preview_bytes": []}
+        for s, e in zip(starts, ends):
+            cid = conv[s]
+            if presampled and tidx[s] == -1:  # sentinel sorts first
+                n_turns = int(totals[s])
+                c = charss[s]
+                s += 1
+                preview = render_conversation(
+                    roles[s:e], texts[s:e], tools[s:e], cfg, prio, budget,
+                    pre_sampled_indices=tidx[s:e].tolist(),
+                    pre_sampled_total=n_turns)
+                # guard both null encodings (float NaN / object None)
+                if c is not None and c == c:
+                    n_chars = int(c) - loser_chars.get(cid, 0)
+                else:
+                    n_chars = sum(len(t) for t in texts[s:e])
+            else:
                 preview = render_conversation(
                     roles[s:e], texts[s:e], tools[s:e], cfg, prio, budget)
-                out["conv_id"].append(conv[s])
-                out["preview"].append(preview)
-                out["n_turns"].append(e - s)
-                out["n_chars"].append(
-                    int(sum(len(t) for t in texts[s:e])))
-                out["preview_bytes"].append(len(preview.encode("utf-8")))
-            return pd.DataFrame(out)
+                n_turns = e - s
+                n_chars = sum(len(t) for t in texts[s:e])
+            out["conv_id"].append(cid)
+            out["preview"].append(preview)
+            out["n_turns"].append(n_turns)
+            out["n_chars"].append(n_chars)
+            out["preview_bytes"].append(len(preview.encode("utf-8")))
+        return pd.DataFrame(out)
 
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # concat(carry, batch) preserves the (conv_id, turn_idx, ts) order
+        carry: pd.DataFrame | None = None
         for pdf in batches:
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
@@ -113,102 +149,19 @@ def make_preview_fn(budget: int = 500, style: str = "default",
     return fn
 
 
-def make_presampled_preview_fn(budget: int, style: str, skew: str,
-                               fmt: str):
-    """mapInPandas kernel for pushed-down input: rows are already the
-    sampler keep-set, PLUS one sentinel row per conversation
-    (turn_idx == -1, sorted first) whose `_total` / `_chars` columns
-    carry the pre-filter conversation length and the sum of text lengths
-    over ALL delivered rows. The sentinel travels through the same single
-    exchange as the data — no totals join, so the pushdown plan costs the
-    same as the full plan even when nothing prunes.
-
-    n_chars semantics (matches the full pipeline: total chars over the
-    LWW-winning turns of the WHOLE conversation, not just the kept set):
-    n_chars = sentinel _chars minus the lengths of duplicate-loser
-    deliveries. Losers on KEPT positions are visible here (the keep-set
-    filter passes every delivery of a kept turn_idx) and are subtracted
-    exactly; a duplicate delivery of a NON-kept turn is invisible
-    post-filter, so its loser length stays counted — n_chars is exact
-    whenever duplicate deliveries land on keep-set positions (or nowhere)
-    and an upper bound otherwise."""
-    import numpy as np
-    cfg, prio, budget = make_configs(format=fmt, style=style,
-                                     character_budget=budget, skew=skew)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-
-        def flush(pdf: pd.DataFrame) -> pd.DataFrame:
-            conv = pdf["conv_id"].to_numpy()
-            tidx = pdf["turn_idx"].to_numpy()
-            keep = np.empty(len(conv), dtype=bool)
-            keep[-1] = True
-            keep[:-1] = (conv[:-1] != conv[1:]) | (tidx[:-1] != tidx[1:])
-            loser_chars: dict = {}
-            if not keep.all():
-                lose = pdf[~keep]
-                loser_chars = {
-                    c: int(s) for c, s in lose.groupby("conv_id")["text"]
-                    .apply(lambda col: sum(len(x) for x in col
-                                           if x is not None)).items()}
-                pdf = pdf[keep]
-                conv = conv[keep]
-                tidx = tidx[keep]
-            roles = pdf["role"].tolist()
-            texts = pdf["text"].tolist()
-            tools = pdf["tool"].tolist()
-            totals = pdf["_total"].to_numpy()
-            charss = pdf["_chars"].to_numpy()
-            bounds = np.flatnonzero(conv[1:] != conv[:-1]) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(conv)]))
-            out = {"conv_id": [], "preview": [], "n_turns": [],
-                   "n_chars": [], "preview_bytes": []}
-            for s, e in zip(starts, ends):
-                cid = conv[s]
-                chars_all = None
-                if tidx[s] == -1:  # sentinel first within the group
-                    total = int(totals[s])
-                    c = charss[s]
-                    # guard both null encodings (float NaN / object None)
-                    if c is not None and c == c:
-                        chars_all = int(c)
-                    s += 1
-                else:  # defensive: sentinel missing, count what we have
-                    total = e - s
-                preview = render_conversation(
-                    roles[s:e], texts[s:e], tools[s:e], cfg, prio, budget,
-                    pre_sampled_indices=[int(x) for x in tidx[s:e]],
-                    pre_sampled_total=total)
-                if chars_all is not None:
-                    n_chars = chars_all - loser_chars.get(cid, 0)
-                else:
-                    n_chars = int(sum(len(t) for t in texts[s:e]))
-                out["conv_id"].append(cid)
-                out["preview"].append(preview)
-                out["n_turns"].append(total)
-                out["n_chars"].append(n_chars)
-                out["preview_bytes"].append(len(preview.encode("utf-8")))
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            last = pdf["conv_id"].iloc[-1]
-            vals = pdf["conv_id"].to_numpy()
-            cut = int(np.searchsorted(vals, last, side="left"))
-            carry = pdf.iloc[cut:]
-            ready = pdf.iloc[:cut]
-            if len(ready):
-                yield flush(ready)
-        if carry is not None and len(carry):
-            yield flush(carry)
-
-    return fn
+def _kernel_stage(rows, budget: int, style: str, skew: str, fmt: str,
+                  num_partitions: int | None):
+    """repartition(conv_id) -> sortWithinPartitions -> the one kernel."""
+    if num_partitions is None:
+        # explicit count pins the exchange: AQE's size-based coalescing
+        # targets ~64MB partitions, which under-parallelizes a
+        # CPU-bound Python kernel stage (bytes are small, work is not)
+        sc = rows.sparkSession.sparkContext
+        num_partitions = max(sc.defaultParallelism * 4, 8)
+    dist = (rows.repartition(num_partitions, "conv_id")
+                .sortWithinPartitions("conv_id", "turn_idx", "ts"))
+    return dist.mapInPandas(make_preview_fn(budget, style, skew, fmt),
+                            schema=PREVIEW_SCHEMA)
 
 
 def conversation_previews_pushdown(df, *, budget: int = 500,
@@ -258,23 +211,10 @@ def conversation_previews_pushdown(df, *, budget: int = 500,
     # whole kept set (also measured: 32.3 s vs 22.5 s at 8M turns).
     # The sentinel also carries sum(length(text)) over ALL deliveries so
     # the kernel can report whole-conversation n_chars (LWW losers on
-    # kept positions subtracted kernel-side — see
-    # make_presampled_preview_fn for the exactness contract).
-    kept = (df.filter(keep)
-              .withColumn("_total", F.lit(None).cast("int"))
-              .withColumn("_chars", F.lit(None).cast("bigint")))
-    sentinels = _total_sentinels(df)
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts",
-            "_total", "_chars"]
-    rows = kept.select(*cols).unionByName(sentinels.select(*cols))
-    if num_partitions is None:
-        sc = df.sparkSession.sparkContext
-        num_partitions = max(sc.defaultParallelism * 4, 8)
-    dist = (rows.repartition(num_partitions, "conv_id")
-                .sortWithinPartitions("conv_id", "turn_idx", "ts"))
-    return dist.mapInPandas(
-        make_presampled_preview_fn(budget, style, skew, fmt),
-        schema=PREVIEW_SCHEMA)
+    # kept positions subtracted kernel-side — see make_preview_fn for
+    # the exactness contract).
+    return _kernel_stage(_with_sentinels(df.filter(keep), _conv_totals(df)),
+                         budget, style, skew, fmt, num_partitions)
 
 
 def _conv_totals(df):
@@ -288,11 +228,14 @@ def _conv_totals(df):
         F.sum(F.length("text")).cast("bigint").alias("_chars"))
 
 
-def _total_sentinels(df):
-    """Totals as sentinel rows (turn_idx = -1, sorts before any data row
-    of the conversation) in the transcript row shape."""
+def _with_sentinels(kept, totals):
+    """Kept transcript rows (null `_total`/`_chars`) unioned with one
+    sentinel row per conversation (turn_idx = -1, sorts before any data
+    row of the conversation) carrying that conversation's totals."""
     from pyspark.sql import functions as F
-    return _conv_totals(df).select(
+    kept = (kept.withColumn("_total", F.lit(None).cast("int"))
+                .withColumn("_chars", F.lit(None).cast("bigint")))
+    sentinels = totals.select(
         "conv_id",
         F.lit(-1).cast("int").alias("turn_idx"),
         F.lit(None).cast("string").alias("role"),
@@ -300,6 +243,9 @@ def _total_sentinels(df):
         F.lit(None).cast("string").alias("tool"),
         F.lit(None).cast("timestamp").alias("ts"),
         "_total", "_chars")
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts",
+            "_total", "_chars"]
+    return kept.select(*cols).unionByName(sentinels.select(*cols))
 
 
 def conversation_previews_tail_pushdown(df, *, budget: int = 500,
@@ -333,28 +279,9 @@ def conversation_previews_tail_pushdown(df, *, budget: int = 500,
                                   F.col("_total").alias("_tt")),
                     "conv_id")
               .filter(F.col("turn_idx") >= F.col("_tt") - cap)
-              .drop("_tt")
-              .withColumn("_total", F.lit(None).cast("int"))
-              .withColumn("_chars", F.lit(None).cast("bigint")))
-    sentinels = totals.select(
-        "conv_id",
-        F.lit(-1).cast("int").alias("turn_idx"),
-        F.lit(None).cast("string").alias("role"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"),
-        "_total", "_chars")
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts",
-            "_total", "_chars"]
-    rows = kept.select(*cols).unionByName(sentinels.select(*cols))
-    if num_partitions is None:
-        sc = df.sparkSession.sparkContext
-        num_partitions = max(sc.defaultParallelism * 4, 8)
-    dist = (rows.repartition(num_partitions, "conv_id")
-                .sortWithinPartitions("conv_id", "turn_idx", "ts"))
-    return dist.mapInPandas(
-        make_presampled_preview_fn(budget, style, "tail", fmt),
-        schema=PREVIEW_SCHEMA)
+              .drop("_tt"))
+    return _kernel_stage(_with_sentinels(kept, totals),
+                         budget, style, "tail", fmt, num_partitions)
 
 
 # auto-dispatch threshold: the pushdown plan pays a totals pre-scan (one
@@ -380,9 +307,8 @@ def clear_plan_cache() -> None:
     _PLAN_DECISIONS.clear()
 
 
-def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
-                        min_prune: float = PUSHDOWN_MIN_PRUNE,
-                        use_cache: bool = True) -> str:
+def choose_preview_plan(df, *, budget: int = 500,
+                        skew: str = "balanced") -> str:
     """Pick 'pushdown' or 'full' from input statistics: the EXACT
     fraction of rows the keep-set filter would prune — the quantity the
     pushdown plan's benefit is proportional to. One map-side-combined
@@ -397,15 +323,13 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
     from pyspark.sql import functions as F
     cap = max(max(budget, 1) // 2, 1)
     shape = "prefix" if skew in ("head", "tail") else "balanced"
-    key = None
-    if use_cache:
-        try:
-            key = (df._jdf.queryExecution().analyzed().semanticHash(),
-                   cap, shape, min_prune)
-        except Exception:
-            key = None
-        if key is not None and key in _PLAN_DECISIONS:
-            return _PLAN_DECISIONS[key]
+    try:
+        key = (df._jdf.queryExecution().analyzed().semanticHash(),
+               cap, shape)
+    except Exception:
+        key = None
+    if key is not None and key in _PLAN_DECISIONS:
+        return _PLAN_DECISIONS[key]
     if shape == "prefix":
         keep = F.col("turn_idx") < cap
     else:
@@ -415,7 +339,7 @@ def choose_preview_plan(df, *, budget: int = 500, skew: str = "balanced",
     if kept_frac is None:
         plan = "full"
     else:
-        plan = ("pushdown" if (1.0 - float(kept_frac)) > min_prune
+        plan = ("pushdown" if 1.0 - float(kept_frac) > PUSHDOWN_MIN_PRUNE
                 else "full")
     if key is not None:
         if len(_PLAN_DECISIONS) >= 1024:  # long-lived-service backstop
@@ -479,33 +403,4 @@ def conversation_previews_full(df, *, budget: int = 500,
     sampling inside the kernel. Needed for tail skew (the keep-set
     depends on conversation length) and kept for A/B benchmarking.
     """
-    if num_partitions is None:
-        # explicit count pins the exchange: AQE's size-based coalescing
-        # targets ~64MB partitions, which under-parallelizes a
-        # CPU-bound Python kernel stage (bytes are small, work is not)
-        sc = df.sparkSession.sparkContext
-        num_partitions = max(sc.defaultParallelism * 4, 8)
-    dist = df.repartition(num_partitions, "conv_id")
-    dist = dist.sortWithinPartitions("conv_id", "turn_idx", "ts")
-    return dist.mapInPandas(
-        make_preview_fn(budget, style, skew, fmt), schema=PREVIEW_SCHEMA)
-
-
-def conversation_previews_grouped(df, *, budget: int = 500,
-                                  style: str = "default",
-                                  skew: str = "balanced", fmt: str = "json"):
-    """applyInPandas variant (one UDF call per conversation) — kept for
-    A/B benchmarking against the mapInPandas pipeline."""
-    cfg, prio, budget_ = make_configs(format=fmt, style=style,
-                                      character_budget=budget, skew=skew)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_turns, n_chars, preview = _summarize_conv(pdf, cfg, prio, budget_)
-        return pd.DataFrame({
-            "conv_id": [pdf["conv_id"].iloc[0]],
-            "preview": [preview],
-            "n_turns": [n_turns],
-            "n_chars": [n_chars],
-            "preview_bytes": [len(preview.encode("utf-8"))]})
-
-    return df.groupBy("conv_id").applyInPandas(fn, schema=PREVIEW_SCHEMA)
+    return _kernel_stage(df, budget, style, skew, fmt, num_partitions)
