@@ -44,6 +44,12 @@ def resolve_template(format: str, style: str) -> str:
     return t
 
 
+def array_cap(budget: int) -> int:
+    """Array item cap for a character budget (python/src/lib.rs): the
+    sampler keeps at most this many items of any array."""
+    return max(budget // 2, 1)
+
+
 def make_configs(*, format: str = "auto", style: str = "default",
                  character_budget: int | None = None,
                  skew: str = "balanced",
@@ -70,7 +76,7 @@ def make_configs(*, format: str = "auto", style: str = "default",
     prio = {
         "max_string_graphemes": (DEFAULT_STRING_CAP if string_cap is None
                                  else max(int(string_cap), 0)),
-        "array_max_items": max(max(budget, 1) // 2, 1),
+        "array_max_items": array_cap(budget),
         "sampler": skew if skew != "balanced" else "balanced",
         "prefer_tail_arrays": prefer_tail,
     }

@@ -263,36 +263,17 @@ def build_conversation_arena(roles, texts, tools, array_cap: int,
     if pre_sampled_indices is not None:
         total = (pre_sampled_total if pre_sampled_total is not None
                  else len(roles))
-        idxs = list(range(len(roles)))  # rows are already the kept set
-        arr_node = Node(kind=ARRAY, array_len=total)
-        arr_id = a.push(arr_node)
-        children = []
-        for i in idxs:
-            t = Node(kind=OBJECT, keys=["role", "text", "tool"],
-                     object_len=3)
-            tid = a.push(t)
-            t.children = [
-                a.push(Node(kind=STRING, string_value=roles[i])),
-                a.push(Node(kind=STRING, string_value=texts[i])),
-                a.push(Node(kind=STRING, string_value=tools[i])),
-            ]
-            children.append(tid)
-        arr_node.children = children
+        rows = range(len(roles))  # rows are already the kept set
         orig = list(pre_sampled_indices)
-        arr_node.arr_indices = (None if orig == list(range(len(orig)))
-                                else orig)
-        root = Node(kind=OBJECT, keys=["turns"], children=[arr_id],
-                    object_len=1)
-        a.root_id = a.push(root)
-        return a
-    total = len(roles)
-    idxs = sample_indices(sampler, array_cap, total)
+    else:
+        total = len(roles)
+        rows = orig = sample_indices(sampler, array_cap, total)
     arr_node = Node(kind=ARRAY, array_len=total)
     # arena node ids don't affect output ordering (pq ids do), so layout
     # here may differ from the recursive builder's — only structure matters
     arr_id = a.push(arr_node)
     children = []
-    for i in idxs:
+    for i in rows:
         t = Node(kind=OBJECT, keys=["role", "text", "tool"], object_len=3)
         tid = a.push(t)
         t.children = [
@@ -302,8 +283,8 @@ def build_conversation_arena(roles, texts, tools, array_cap: int,
         ]
         children.append(tid)
     arr_node.children = children
-    arr_node.arr_indices = (None if idxs == list(range(len(idxs)))
-                            else idxs)
+    arr_node.arr_indices = (None if orig == list(range(len(orig)))
+                            else orig)
     root = Node(kind=OBJECT, keys=["turns"], children=[arr_id],
                 object_len=1)
     a.root_id = a.push(root)

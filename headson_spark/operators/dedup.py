@@ -41,16 +41,6 @@ def _shingles_expr(text_col: str, k: int) -> str:
             f"i -> substring({norm}, i, {k})))")
 
 
-def _word_shingles_expr(text_col: str, w: int) -> str:
-    """Distinct w-word shingles — the standard document MinHash unit
-    (~10x fewer shingles than char shingles at the same recall)."""
-    toks = (f"filter(split(lower({text_col}), '[^a-z0-9]+'), "
-            f"x -> x != '')")
-    return (f"array_distinct(transform("
-            f"sequence(1, greatest(size({toks}) - {w - 1}, 1)), "
-            f"i -> array_join(slice({toks}, i, {w}), ' ')))")
-
-
 # 2^31 - 1: keeps (x % P) * a + b < 2^62, safe under ANSI bigint overflow
 MINHASH_P = 2147483647
 
@@ -60,14 +50,6 @@ def minhash_params(n_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
     return [(mix64((seed << 20) ^ (2 * j)) % (MINHASH_P - 1) + 1,
              mix64((seed << 20) ^ (2 * j + 1)) % MINHASH_P)
             for j in range(n_hashes)]
-
-
-def _shingle_int_expr(shingles: str) -> str:
-    """One md5 per shingle -> 60-bit integer; the (a*x+b) mod P family
-    derives every hash from this single digest."""
-    return (f"transform({shingles}, s -> "
-            f"cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint) "
-            f"% {MINHASH_P})")
 
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",

@@ -23,25 +23,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 MEDIA_SCHEMA = ("media_id bigint, kind string, payload binary, "
                 "width int, height int, sample_rate int")
 
 FEATURE_SCHEMA = ("media_id bigint, kind string, n_bytes int, "
                   "sha256 string, feat array<float>")
-
-
-def synth_media(df: DataFrame, id_col: str, text_col: str,
-                kind: str = "image") -> DataFrame:
-    """Derive a deterministic binary 'media' column from a text column —
-    stands in for real image/audio payloads in tests."""
-    return df.select(
-        F.col(id_col).alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
-        F.lit(64).alias("width"), F.lit(64).alias("height"),
-        F.lit(16000).alias("sample_rate"))
 
 
 PPM_W, PPM_H = 16, 16  # synth fixture geometry (768 RGB bytes)

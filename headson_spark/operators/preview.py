@@ -35,7 +35,8 @@ from typing import Iterator
 
 import pandas as pd
 
-from ..kernel.api import make_configs, render_conversation
+from ..kernel.api import array_cap, make_configs, render_conversation
+from .sampling import keep_set_column
 
 PREVIEW_SCHEMA = ("conv_id string, preview string, n_turns int, "
                   "n_chars bigint, preview_bytes int")
@@ -185,18 +186,11 @@ def conversation_previews_pushdown(df, *, budget: int = 500,
     Per-conversation totals (length + char count) travel as one sentinel
     row per conversation through the same exchange as the kept rows.
     """
-    from pyspark.sql import functions as F
-
     if skew == "tail":
         return conversation_previews_tail_pushdown(
             df, budget=budget, style=style, fmt=fmt,
             num_partitions=num_partitions)
-    cap = max(max(budget, 1) // 2, 1)
-    if skew == "head":
-        keep = F.col("turn_idx") < cap
-    else:
-        from .sampling import default_kept_positions
-        keep = F.col("turn_idx").isin(default_kept_positions(cap))
+    keep = keep_set_column(skew, array_cap(budget))
     # Duplicate (conv_id, turn_idx) deliveries merge last-write-wins in
     # the kernel, so the document length is the number of DISTINCT
     # turns — which, under this operator's dense-0-based-turn_idx
@@ -273,7 +267,7 @@ def conversation_previews_tail_pushdown(df, *, budget: int = 500,
     matrix incl. the 50k-turn hot conversation)."""
     from pyspark.sql import functions as F
 
-    cap = max(max(budget, 1) // 2, 1)
+    cap = array_cap(budget)
     totals = _conv_totals(df)
     kept = (df.join(totals.select("conv_id",
                                   F.col("_total").alias("_tt")),
@@ -321,7 +315,7 @@ def choose_preview_plan(df, *, budget: int = 500,
     exact for all three skews. At deployment scale this comes from a
     maintained table-stats aggregate rather than a per-query scan."""
     from pyspark.sql import functions as F
-    cap = max(max(budget, 1) // 2, 1)
+    cap = array_cap(budget)
     shape = "prefix" if skew in ("head", "tail") else "balanced"
     try:
         key = (df._jdf.queryExecution().analyzed().semanticHash(),
@@ -330,11 +324,8 @@ def choose_preview_plan(df, *, budget: int = 500,
         key = None
     if key is not None and key in _PLAN_DECISIONS:
         return _PLAN_DECISIONS[key]
-    if shape == "prefix":
-        keep = F.col("turn_idx") < cap
-    else:
-        from .sampling import default_kept_positions
-        keep = F.col("turn_idx").isin(default_kept_positions(cap))
+    keep = keep_set_column("head" if shape == "prefix" else "balanced",
+                           cap)
     kept_frac = df.agg(F.avg(keep.cast("double"))).first()[0]
     if kept_frac is None:
         plan = "full"

@@ -9,7 +9,7 @@ cutting shuffle volume to O(cap) turns per conversation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..kernel.arena import default_sample_indices
 
@@ -19,6 +19,15 @@ def default_kept_positions(cap: int, max_len: int = 1 << 20) -> list[int]:
     of length L the kept set is {i in K(cap) : i < L} (prefix-closed), so
     one precomputed list serves every conversation."""
     return default_sample_indices(cap, max_len)
+
+
+def keep_set_column(skew: str, cap: int) -> Column:
+    """The sampler keep-set as a predicate on the dense turn position
+    turn_idx: positions below cap for skew="head", K(cap) for any other
+    skew (the balanced sampler)."""
+    if skew == "head":
+        return F.col("turn_idx") < cap
+    return F.col("turn_idx").isin(default_kept_positions(cap))
 
 
 def with_turn_ordinal(df: DataFrame) -> DataFrame:

@@ -9,9 +9,10 @@ Pipeline:
 
 The group key is pmod(xxhash64(conv_id), n_buckets) or conv_id itself;
 either way one function merges and renders every conversation in the
-group. Per-conversation state holds the merged turn map (the "stateful
-join" on (conv_id, turn_idx): late/duplicate turns merge last-write-wins
-by ts), with stable turn ordering enforced before budget allocation.
+group. Per-conversation state is the "stateful join" on (conv_id,
+turn_idx): late/duplicate turns merge last-write-wins by ts into a
+seen-bitmap plus the contents of the turns the preview can still render,
+with stable turn ordering enforced before budget allocation.
 Conversation sessions close via event-time timeout (session-window
 semantics hosted inside the stateful operator — declarative
 session_window cannot hold arbitrary state). Checkpointed and resumable;
@@ -19,17 +20,18 @@ replays are idempotent because the sink MERGEs on conv_id and skips
 already-committed batch ids.
 
 Scale notes:
-- state per conversation is O(array_cap) once the turn cap is applied;
-  the watermark bounds how long state lives
-- conv_id skew: the state shuffle hashes conv_id; a hot conversation is
-  bounded by the turn cap + kernel SAFETY_CAP; upstream salting helper in
-  headson_spark.plans.salting pre-aggregates oversized conversations
+- state per conversation is O(array_cap) turn contents plus one bit per
+  delivered turn, for every skew; the watermark bounds how long it lives
+- conv_id skew: the state shuffle hashes conv_id; a hot conversation's
+  state is bounded the same way, and rows at turn_idx >=
+  MAX_TURNS_IN_STATE are dropped before they reach the bitmap
 """
 
 from __future__ import annotations
 
 import json
 import os
+from bisect import bisect_left
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -39,33 +41,31 @@ from ..kernel.api import make_configs, render_conversation
 OUTPUT_SCHEMA = ("conv_id string, preview string, n_turns int, "
                  "last_ts timestamp, final boolean")
 
-
-def _render_from_turn_map(turn_map: dict, cfg, prio, budget) -> str:
-    idxs = sorted(turn_map, key=int)
-    return render_conversation([turn_map[i][0] for i in idxs],
-                               [turn_map[i][1] for i in idxs],
-                               [turn_map[i][2] for i in idxs],
-                               cfg, prio, budget)
+# seen-bitmap guard: rows with turn_idx outside [0, MAX_TURNS_IN_STATE)
+# are dropped (see _st_merge_cols)
+MAX_TURNS_IN_STATE = 100_000
 
 
 # --------------------------------------------------------------------------
-# budget-bounded conversation state (balanced/head skew)
+# budget-bounded conversation state
 #
-# The sampler keep-sets are prefix-closed position sets K(cap): for any
-# conversation length L the rendered turns are {rank r in K : r < L}. A
-# turn's rank (position among delivered turns) only GROWS as earlier late
-# turns arrive, and equals its dense turn_idx once the conversation is
-# complete. So a turn's content can ever be rendered iff
-# [current_rank, turn_idx] intersects K — everything else is droppable,
-# and state shrinks to O(cap) content entries + a seen-bitmap (1 bit per
-# turn) instead of the full transcript. A 50k-turn conversation holds
-# ~250 turn contents + 6.2 KB of bitmap in state instead of ~6 MB of
-# JSON-encoded turns re-serialized every micro-batch.
+# Let n be the number of delivered turns (the seen-bitmap's popcount) and
+# r a turn's rank (delivered turns below it). The renderer shows the
+# turns whose rank is in the sampler's keep-set: r in K(cap) for
+# balanced/head (prefix-closed position sets), r >= n - cap for tail. As
+# late turns land, a turn's rank only GROWS (up to its dense turn_idx i)
+# and the count n - 1 - r of delivered turns above it only grows too. So
+# a turn can ever be rendered again iff K ∩ [r, i] != ∅ (balanced/head)
+# or n - 1 - r < cap (tail); every other content is dropped for good,
+# and state is O(cap) contents + a seen-bitmap (1 bit per turn) instead
+# of the full transcript. A 50k-turn conversation holds ~250 turn
+# contents + 6.2 KB of bitmap instead of every turn re-serialized each
+# micro-batch.
 
 
-def _keepset(prio, budget) -> list[int] | None:
-    """Sorted keep-set positions for the active sampler, None for tail
-    (tail kept-ness depends on final length — unbounded state path)."""
+def _keepset(prio) -> list[int] | None:
+    """Sorted keep-set positions for balanced/head, None for tail (the
+    last cap of n)."""
     from ..operators.sampling import default_kept_positions
     cap = prio["array_max_items"]
     if prio["prefer_tail_arrays"]:
@@ -73,6 +73,18 @@ def _keepset(prio, budget) -> list[int] | None:
     if prio["sampler"] == "head":
         return list(range(cap))
     return sorted(default_kept_positions(cap))
+
+
+def _live(keep: list[int] | None, cap: int, n: int, r: int,
+          hi: int) -> bool:
+    """Whether a turn of rank r among n delivered turns is rendered at
+    some rank in [r, hi]: hi = r asks "rendered now", hi = turn_idx asks
+    "can ever be rendered". Tail ignores hi: n - 1 - r only grows, so
+    both questions have the same answer."""
+    if keep is None:
+        return n - 1 - r < cap
+    j = bisect_left(keep, r)
+    return j < len(keep) and keep[j] <= hi
 
 
 def _bits_set(bits: bytearray, idx: int) -> None:
@@ -92,67 +104,38 @@ def _bits_ranks(bits: bytes):
     return total, cum - arr  # exclusive prefix sum
 
 
-def _prune_kept(st: dict, keep: list[int]) -> None:
-    """Drop turn contents that can never be rendered again: a turn at
-    dense index i with current rank r is needed iff K ∩ [r, i] != ∅
-    (rank grows monotonically toward i as missing earlier turns land)."""
-    from bisect import bisect_left
-    total, rank = _bits_ranks(st["b"])
-    st["n"] = total
+def _prune_kept(st: dict, keep: list[int] | None, cap: int) -> None:
+    """Drop the turn contents that can never be rendered again."""
+    n, rank = _bits_ranks(st["b"])
     kept = st["k"]
-    drop = []
-    for key in kept:
-        i = int(key)
-        r = int(rank[i])
-        j = bisect_left(keep, r)
-        if j >= len(keep) or keep[j] > i:
-            drop.append(key)
-    for key in drop:
+    for key in [k for k in kept
+                if not _live(keep, cap, n, int(rank[int(k)]), int(k))]:
         del kept[key]
 
 
 def _render_bounded(st: dict, cfg, prio, budget,
-                    keepset: set[int]) -> str:
-    """Render from bounded state: turns whose CURRENT rank is in the
-    keep-set, as the pre-sampled arena (byte-equal to the batch pipeline
-    on the same delivered turns — the pushdown equivalence)."""
-    total, rank = _bits_ranks(st["b"])
-    picked = []
-    for key, v in st["k"].items():
-        i = int(key)
-        r = int(rank[i])
-        if r in keepset:
-            picked.append((r, v))
-    picked.sort()
-    return render_conversation(
+                    keep: list[int] | None) -> tuple[int, str]:
+    """(n, preview) from bounded state: the turns rendered at their
+    CURRENT rank, as the pre-sampled arena (byte-equal to the batch
+    pipeline on the same delivered turns — the pushdown equivalence)."""
+    n, rank = _bits_ranks(st["b"])
+    cap = prio["array_max_items"]
+    picked = sorted((r, v) for r, v in
+                    ((int(rank[int(k)]), v) for k, v in st["k"].items())
+                    if _live(keep, cap, n, r, r))
+    return n, render_conversation(
         [v[0] for _, v in picked], [v[1] for _, v in picked],
         [v[2] for _, v in picked], cfg, prio, budget,
         pre_sampled_indices=[r for r, _ in picked],
-        pre_sampled_total=total)
+        pre_sampled_total=n)
 
 
 def _st_new() -> dict:
-    # v counts completed merge rounds for this conversation (drives the
-    # every_k emission policy)
-    return {"b": bytearray(), "k": {}, "mx": 0, "n": 0, "v": 0}
-
-
-def _should_emit(policy: str, every: int, version: int) -> bool:
-    """Intermediate-emission decision (final timeout emissions always
-    fire). on_change: every update; on_close: never (the render itself is
-    skipped — one render per conversation total); every_k: every k-th
-    merge round that changed the conversation."""
-    if policy == "on_change":
-        return True
-    if policy == "on_close":
-        return False
-    if policy == "every_k":
-        return version % max(every, 1) == 0
-    raise ValueError(f"unknown emit_policy: {policy!r}")
+    return {"b": bytearray(), "k": {}, "mx": 0}
 
 
 def _st_merge_cols(st: dict, tidxs, roles, texts, tools, ts_list,
-                   max_idx: int = 100_000) -> bool:
+                   max_idx: int = MAX_TURNS_IN_STATE) -> bool:
     """LWW-merge pre-extracted column slices into bounded state; True if
     any content or count changed.
 
@@ -212,9 +195,7 @@ def _bucket_decode(blob) -> dict:
 def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
                              skew: str = "balanced", fmt: str = "json",
                              session_gap_ms: int = 600_000,
-                             max_turns_in_state: int = 100_000,
-                             emit_policy: str = "on_change",
-                             emit_every: int = 8):
+                             emit_policy: str = "on_change"):
     """Build the applyInPandasWithState function (state schema
     BUCKET_STATE_SCHEMA, output OUTPUT_SCHEMA).
 
@@ -231,35 +212,27 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
     Trade-off of coalescing: a group's state blob is rewritten whenever
     any of its conversations change (write amplification ~group size).
     B tunes between per-group overhead (B too big) and amplification (B
-    too small). Balanced/head skew keeps budget-bounded state per
-    conversation (O(cap) contents + seen-bitmap — see the module
-    helpers), which keeps the blob small even for mega-conversations;
-    tail skew keeps the full turn map because tail kept-ness depends on
-    the final length.
+    too small). Every skew keeps budget-bounded state per conversation
+    (O(cap) contents + seen-bitmap — see the module helpers), which
+    keeps the blob small even for mega-conversations.
 
     emit_policy controls intermediate emissions (final session-close
     emissions always fire): "on_change" re-renders every changed
     conversation per micro-batch; "on_close" skips ALL intermediate
     renders (one render per conversation at session close — the
-    throughput mode when only final previews matter); "every_k" renders
-    a changed conversation only on its every emit_every-th CHANGED
-    merge round. All policies converge to identical final (final=True)
-    rows.
+    throughput mode when only final previews matter). Both policies
+    converge to identical final (final=True) rows.
     """
-    if emit_policy not in ("on_change", "on_close", "every_k"):
+    if emit_policy not in ("on_change", "on_close"):
         raise ValueError(f"unknown emit_policy: {emit_policy!r}")
     cfg, prio, budget = make_configs(format=fmt, style=style,
                                      character_budget=budget, skew=skew)
-    keep = _keepset(prio, budget)
-    keepset = set(keep) if keep is not None else None
+    keep = _keepset(prio)
+    cap = prio["array_max_items"]
 
-    def render(st: dict) -> str:
-        if keep is not None:
-            return _render_bounded(st, cfg, prio, budget, keepset)
-        return _render_from_turn_map(st["k"], cfg, prio, budget)
-
-    def n_turns_of(st: dict) -> int:
-        return st["n"] if keep is not None else len(st["k"])
+    def row(cid, st: dict, final: bool):
+        n, preview = _render_bounded(st, cfg, prio, budget, keep)
+        return cid, preview, n, st["mx"], final
 
     def emit(rows):
         return pd.DataFrame({
@@ -286,8 +259,7 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
             closed, remaining = [], {}
             for cid, st in convs.items():
                 if st["mx"] // 1000 + session_gap_ms <= wm_ms:
-                    closed.append((cid, render(st), n_turns_of(st),
-                                   st["mx"], True))
+                    closed.append(row(cid, st, True))
                 else:
                     remaining[cid] = st
             if remaining:
@@ -328,29 +300,15 @@ def make_bucketed_preview_fn(budget: int = 500, style: str = "default",
                 if st is None:
                     st = convs[cid] = _st_new()
                 if _st_merge_cols(st, tidxs[s:e], roles[s:e],
-                                  texts[s:e], tools[s:e], ts_list[s:e],
-                                  max_turns_in_state):
+                                  texts[s:e], tools[s:e], ts_list[s:e]):
                     changed.add(cid)
         for cid in changed:
-            st = convs[cid]
-            st["v"] = st.get("v", 0) + 1
-            if keep is not None:
-                _prune_kept(st, keep)
-            elif len(st["k"]) > max_turns_in_state:
-                ks = sorted(st["k"], key=int)[:max_turns_in_state]
-                st["k"] = {k: st["k"][k] for k in ks}
+            _prune_kept(convs[cid], keep, cap)
         state.update((_bucket_encode(convs), len(convs)))
         _arm_timeout(state, convs, wm_ms)
-        if changed:
-            rows = []
-            for cid in sorted(changed):
-                st = convs[cid]
-                if not _should_emit(emit_policy, emit_every, st["v"]):
-                    continue
-                rows.append((cid, render(st), n_turns_of(st), st["mx"],
-                             False))
-            if rows:
-                yield emit(rows)
+        if changed and emit_policy == "on_change":
+            yield emit([row(cid, convs[cid], False)
+                        for cid in sorted(changed)])
 
     return fn
 
@@ -360,8 +318,7 @@ def streaming_previews(stream_df, *, budget: int = 500,
                        fmt: str = "json", watermark: str = "10 minutes",
                        session_gap_ms: int = 600_000,
                        n_buckets: int | None = 512,
-                       emit_policy: str = "on_change",
-                       emit_every: int = 8):
+                       emit_policy: str = "on_change"):
     """stream_df: streaming DataFrame with the transcript schema.
 
     n_buckets picks the stateful group key: a number groups by
@@ -371,8 +328,8 @@ def streaming_previews(stream_df, *, budget: int = 500,
     groups by conv_id. Both run make_bucketed_preview_fn and produce
     identical rows.
 
-    emit_policy: "on_change" (default) / "on_close" / "every_k" — see
-    make_bucketed_preview_fn. All policies agree on final (final=True)
+    emit_policy: "on_change" (default) / "on_close" — see
+    make_bucketed_preview_fn. Both policies agree on final (final=True)
     rows; on_close trades intermediate visibility for throughput.
 
     CHECKPOINT COMPATIBILITY: the group key and the state schema are
@@ -388,13 +345,16 @@ def streaming_previews(stream_df, *, budget: int = 500,
       emitted_version int') and is now BUCKET_STATE_SCHEMA's pickled
       binary blob, which Spark's state value-schema validation rejects
       on resume.
+    Tail-skew state written while tail kept every delivered turn resumes
+    in place: the turn count comes from the seen-bitmap, the old count
+    and round fields are ignored, and the first round that changes a
+    conversation prunes its turn map to the last cap turns.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     fn = make_bucketed_preview_fn(budget, style, skew, fmt, session_gap_ms,
-                                  emit_policy=emit_policy,
-                                  emit_every=emit_every)
+                                  emit_policy=emit_policy)
     df = stream_df.withWatermark("ts", watermark)
     if n_buckets:
         df = df.withColumn("_bucket", F.pmod(F.xxhash64("conv_id"),
@@ -514,7 +474,7 @@ def run_stream(spark, source_dir: str, sink: KeyedParquetSink,
                session_gap_ms: int = 600_000, available_now: bool = True,
                max_files_per_trigger: int | None = None,
                n_buckets: int | None = 512,
-               emit_policy: str = "on_change", emit_every: int = 8):
+               emit_policy: str = "on_change"):
     """File-source streaming job (swap readStream.format('iceberg') for an
     Iceberg catalog deployment — same plan otherwise).
 
@@ -530,8 +490,7 @@ def run_stream(spark, source_dir: str, sink: KeyedParquetSink,
                              watermark=watermark,
                              session_gap_ms=session_gap_ms,
                              n_buckets=n_buckets,
-                             emit_policy=emit_policy,
-                             emit_every=emit_every)
+                             emit_policy=emit_policy)
     writer = (out.writeStream
               .foreachBatch(sink)
               .outputMode("update")

@@ -35,34 +35,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..kernel.api import make_configs, render_conversation
-
-
-def make_render_udf(budget: int = 500, style: str = "default",
-                    skew: str = "balanced", fmt: str = "json"):
-    """Render UDF over a complete (unfiltered) turn-struct array — used
-    when the caller collected every turn of the group (the row IS the
-    group; one kernel render per row)."""
-    cfg, prio, budget_ = make_configs(format=fmt, style=style,
-                                      character_budget=budget, skew=skew)
-
-    @pandas_udf("string")
-    def render_turns(turns: pd.Series) -> pd.Series:
-        out = []
-        for arr in turns:
-            items = sorted(arr, key=lambda r: (r["turn_idx"], r["ts"]))
-            # last-write-wins per turn_idx
-            merged: dict[int, tuple] = {}
-            for r in items:
-                merged[r["turn_idx"]] = (r["role"], r["text"], r["tool"])
-            idxs = sorted(merged)
-            out.append(render_conversation(
-                [merged[i][0] for i in idxs],
-                [merged[i][1] for i in idxs],
-                [merged[i][2] for i in idxs], cfg, prio, budget_))
-        return pd.Series(out)
-
-    return render_turns
+from ..kernel.api import array_cap, make_configs, render_conversation
 
 
 def make_presampled_render_udf(budget: int = 500, style: str = "default",
@@ -120,18 +93,14 @@ def rolling_previews(stream_df, *, window: str = "5 minutes",
     kept for the same reason. Where whole-conversation previews per
     window matter, use the stateful session engine instead.
     """
-    from ..operators.sampling import default_kept_positions
+    from ..operators.sampling import keep_set_column
 
-    cap = max(max(budget, 1) // 2, 1)
-    if skew == "head":
-        keep = F.col("turn_idx") < cap
-    elif skew == "balanced":
-        keep = F.col("turn_idx").isin(default_kept_positions(cap))
-    else:
+    if skew not in ("balanced", "head"):
         raise ValueError(
             f"rolling_previews supports skew='balanced'|'head', got "
             f"{skew!r}; tail kept-ness needs the conversation length — "
             f"use the stateful session engine for tail skew")
+    keep = keep_set_column(skew, array_cap(budget))
     win = (F.window("ts", window, slide) if slide
            else F.window("ts", window))
     render = make_presampled_render_udf(budget=budget, style=style,

@@ -27,7 +27,7 @@ def main():
     # engine: bucket count for state coalescing; 0 = per-conversation
     n_buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 512
     n_buckets = n_buckets or None
-    # emission policy: on_change (default) / on_close / every_k
+    # emission policy: on_change (default) / on_close
     emit_policy = sys.argv[4] if len(sys.argv) > 4 else "on_change"
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 

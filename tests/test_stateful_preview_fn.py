@@ -4,7 +4,8 @@ make_bucketed_preview_fn is the only stateful preview function; grouping
 by conv_id just hands it groups that hold one conversation each. These
 tests drive it with a fake GroupState through merge rounds and session
 timeouts: last-write-wins, stale duplicates, out-of-order backfill, emit
-policies, the event-time timeout, and session restart after close.
+policies, the event-time timeout, session restart after close, and the
+bounded tail-skew state.
 """
 
 from __future__ import annotations
@@ -206,18 +207,16 @@ def test_unchanged_batch_emits_nothing():
 
 
 def test_emit_policies_agree_on_final_state():
-    """on_change / on_close / every_k: identical final render and the
-    documented intermediate-emission counts (3 changed rounds; every_k
-    with k=2 emits on round 2 only)."""
+    """on_change / on_close: identical final render and the documented
+    intermediate-emission counts (3 changed rounds)."""
     batches = [
         _batch([(0, "user", "a", "", "2026-01-01T00:00:00")]),
         _batch([(1, "assistant", "b", "", "2026-01-01T00:00:01")]),
         _batch([(2, "user", "c", "", "2026-01-01T00:00:02")]),
     ]
     finals = {}
-    for policy, expect_inter in (("on_change", 3), ("on_close", 0),
-                                 ("every_k", 1)):
-        rows = _rows(run(batches, emit_policy=policy, emit_every=2)[0])
+    for policy, expect_inter in (("on_change", 3), ("on_close", 0)):
+        rows = _rows(run(batches, emit_policy=policy)[0])
         assert len([r for r in rows if not r["final"]]) == expect_inter
         assert rows[-1]["final"]
         finals[policy] = rows[-1]["preview"]
@@ -225,23 +224,9 @@ def test_emit_policies_agree_on_final_state():
 
 
 def test_rejects_unknown_policy():
-    with pytest.raises(ValueError):
-        make_bucketed_preview_fn(emit_policy="sometimes")
-
-
-def test_every_k_cadence_skips_unchanged_rounds():
-    """every_k counts CHANGED merge rounds only: a stale-replay round (LWW
-    loser) must not advance the cadence. Changed rounds here are 1,2,3,4
-    with a stale round between 2 and 3; emit_every=2 => intermediates on
-    changed rounds 2 and 4 exactly."""
-    out, _ = run([
-        _batch([(0, "user", "a", "", "2026-01-01T00:05:00")]),        # r1
-        _batch([(1, "assistant", "b", "", "2026-01-01T00:05:01")]),   # r2
-        _batch([(0, "user", "stale", "", "2026-01-01T00:00:00")]),    # --
-        _batch([(2, "user", "c", "", "2026-01-01T00:05:02")]),        # r3
-        _batch([(3, "assistant", "d", "", "2026-01-01T00:05:03")]),   # r4
-    ], emit_policy="every_k", emit_every=2, expire=False)
-    assert [r["n_turns"] for r in _rows(out)] == [2, 4]
+    for policy in ("sometimes", "every_k"):
+        with pytest.raises(ValueError):
+            make_bucketed_preview_fn(emit_policy=policy)
 
 
 def test_timeout_tracks_max_ts_and_clamps_past_watermark():
@@ -266,7 +251,7 @@ def test_timeout_tracks_max_ts_and_clamps_past_watermark():
 
 def test_new_delivery_after_close_starts_fresh_session():
     """After the timeout closes a session, a later delivery for the same
-    conversation rebuilds it from scratch (fresh rounds counter, fresh
+    conversation rebuilds it from scratch (fresh bitmap, fresh
     turn map) and arms a fresh deadline."""
     d = GroupRunner()
     d.deliver(_batch([(0, "user", "first session", "",
@@ -300,3 +285,82 @@ def test_shared_group_emits_same_rows_as_one_group_per_conversation():
     alone = _rows(run(a)[0]) + _rows(run(b)[0])
     key = (lambda r: (r["conv_id"], r["final"], r["n_turns"]))
     assert sorted(together, key=key) == sorted(alone, key=key)
+
+
+TAIL_N = 5000
+
+
+def _tail_turns(n=TAIL_N):
+    return [(i, "user" if i % 3 else "assistant", f"tail turn {i} " * 2, "",
+             f"2026-01-01T{i // 3600:02d}:{(i // 60) % 60:02d}:{i % 60:02d}")
+            for i in range(n)]
+
+
+def _tail_expected(turns):
+    # "detailed" prints the omitted-turn count, so a wrong total shows
+    return summarize_value(
+        {"turns": [{"role": r, "text": t, "tool": tool}
+                   for _, r, t, tool, _ in turns]},
+        character_budget=500, skew="tail", style="detailed")
+
+
+def test_tail_state_holds_at_most_cap_contents():
+    """A shuffled 5000-turn tail conversation, with turn 3 held back to
+    the last round and stale duplicates of the last turn and of a pruned
+    turn, keeps at most cap turn contents in state after every round,
+    and its final row is the tail preview of the whole conversation."""
+    import random
+    from headson_spark.streaming.engine import _bucket_decode
+    turns = _tail_turns()
+    late = turns[3]
+    order = [t for t in turns if t[0] != 3]
+    random.Random(11).shuffle(order)
+    rounds = [order[i:i + 1000] for i in range(0, len(order), 1000)]
+    stale = [(i, "user", "STALE", "", "2025-12-31T00:00:00")
+             for i in (TAIL_N - 1, 10)]
+    rounds[-1] = rounds[-1] + stale + [late]
+    d = GroupRunner(skew="tail", style="detailed")
+    cap = 500 // 2
+    for rnd in rounds:
+        d.deliver(_batch(rnd))
+        st = _bucket_decode(d.state.get[0])["conv"]
+        assert len(st["k"]) <= cap
+    final = _rows(d.expire())[-1]
+    assert final["final"] and final["n_turns"] == TAIL_N
+    assert final["preview"] == _tail_expected(turns)
+    assert "STALE" not in final["preview"]
+
+
+def test_tail_state_with_full_turn_map_resumes():
+    """Tail state written while tail kept every delivered turn (full map,
+    a stale count "n" and a rounds field "v") still expires to the tail
+    preview of the whole conversation: the count comes from the bitmap.
+    The first round that changes the conversation prunes the map."""
+    from headson_spark.streaming.engine import (_bits_set, _bucket_decode,
+                                                _bucket_encode, _st_new)
+    turns = _tail_turns(601)
+    st = _st_new()
+    for i, role, text, tool, ts in turns[:600]:
+        _bits_set(st["b"], i)
+        st["k"][str(i)] = [role, text, tool,
+                           int(pd.Timestamp(ts).value // 1_000)]
+    st["mx"] = max(v[3] for v in st["k"].values())
+    st.update({"n": 0, "v": 3})
+
+    def resumed():
+        d = GroupRunner(skew="tail", style="detailed")
+        d.state.update((_bucket_encode({"conv": st}), 1))
+        d.state.timeout_ts = st["mx"] // 1000 + GAP_MS
+        return d
+
+    final = _rows(resumed().expire())
+    assert len(final) == 1 and final[0]["final"]
+    assert final[0]["n_turns"] == 600
+    assert final[0]["preview"] == _tail_expected(turns[:600])
+
+    d = resumed()
+    d.deliver(_batch([turns[600]]))
+    assert len(_bucket_decode(d.state.get[0])["conv"]["k"]) == 500 // 2
+    final = _rows(d.expire())[-1]
+    assert final["n_turns"] == 601
+    assert final["preview"] == _tail_expected(turns)

@@ -46,16 +46,18 @@ def late_stream(tmp_path):
     return _late_chunks(tmp_path)
 
 
-def _batch_expected(spark, pdf):
+def _batch_expected(spark, pdf, skew="balanced"):
     sdf = spark.createDataFrame(pdf)
-    rows = conversation_previews(sdf, budget=500).collect()
+    rows = conversation_previews(sdf, budget=500, skew=skew).collect()
     return {r["conv_id"]: r["preview"] for r in rows}
 
 
-@pytest.mark.parametrize("n_buckets", [None, 16],
-                         ids=["per-conv", "bucketed16"])
+@pytest.mark.parametrize("n_buckets,skew", [
+    pytest.param(None, "balanced", id="per-conv"),
+    pytest.param(16, "balanced", id="bucketed16"),
+    pytest.param(16, "tail", id="bucketed16-tail")])
 def test_stream_matches_batch_exactly_once(spark, late_stream, tmp_path,
-                                           n_buckets):
+                                           n_buckets, skew):
     src, chunks, full = late_stream
     for i, c in enumerate(chunks):
         _write_chunk(src, i, c)
@@ -63,11 +65,12 @@ def test_stream_matches_batch_exactly_once(spark, late_stream, tmp_path,
     metrics = MetricsRecorder(str(tmp_path / "metrics.jsonl"))
     metrics.attach(spark)
     q = run_stream(spark, str(src), sink, str(tmp_path / "ckpt"),
-                   budget=500, available_now=True, n_buckets=n_buckets)
+                   budget=500, skew=skew, available_now=True,
+                   n_buckets=n_buckets)
     q.awaitTermination(300)
     got_df = sink.read_latest(spark)
     got = {r["conv_id"]: r["preview"] for r in got_df.collect()}
-    exp = _batch_expected(spark, full)
+    exp = _batch_expected(spark, full, skew)
     assert set(got) == set(exp)
     bad = [k for k in exp if got[k] != exp[k]]
     assert not bad, f"stream != batch for {bad[:5]}"
@@ -280,7 +283,11 @@ def test_skewhot_conversation_streams_bounded_per_conv(spark, tmp_path):
     _check_skewhot(spark, tmp_path, n_buckets=None)
 
 
-def _check_skewhot(spark, tmp_path, n_buckets):
+def test_skewhot_conversation_streams_bounded_tail(spark, tmp_path):
+    _check_skewhot(spark, tmp_path, n_buckets=512, skew="tail")
+
+
+def _check_skewhot(spark, tmp_path, n_buckets, skew="balanced"):
     cols = generate_rows(0.01, tags=["skewhot"])
     tbl = to_arrow(cols)
     src = tmp_path / "hot_src"
@@ -288,7 +295,7 @@ def _check_skewhot(spark, tmp_path, n_buckets):
     pq.write_table(tbl, str(src / "hot.parquet"))
     sink = KeyedParquetSink(str(tmp_path / "hot_sink"))
     q = run_stream(spark, str(src), sink, str(tmp_path / "hot_ckpt"),
-                   budget=500, available_now=True,
+                   budget=500, skew=skew, available_now=True,
                    session_gap_ms=7 * 24 * 3600 * 1000, n_buckets=n_buckets)
     q.awaitTermination(600)
     rows = sink.read_latest(spark).collect()
@@ -298,7 +305,7 @@ def _check_skewhot(spark, tmp_path, n_buckets):
     assert len(r["preview"].encode("utf-8")) <= 500
     # batch pipeline agrees on the hot conversation
     batch = conversation_previews(
-        spark.read.parquet(str(src)), budget=500).collect()
+        spark.read.parquet(str(src)), budget=500, skew=skew).collect()
     assert batch[0]["preview"] == r["preview"]
 
 
@@ -337,8 +344,8 @@ def _policy_rows(conv, idxs, ts):
 @pytest.mark.parametrize("n_buckets", [None, 2],
                          ids=["per-conv", "bucketed2"])
 def test_emit_policies_agree_on_final_states(spark, tmp_path, n_buckets):
-    """on_change / on_close / every_k must converge to identical
-    final (final=True) rows; on_close must emit NOTHING before close."""
+    """on_change / on_close must converge to identical final
+    (final=True) rows; on_close must emit NOTHING before close."""
     day = 24 * 3600 * 1000
     t0 = pd.Timestamp("2026-01-01")
 
@@ -357,7 +364,7 @@ def test_emit_policies_agree_on_final_states(spark, tmp_path, n_buckets):
                                       t0 + pd.Timedelta(days=30)))
 
     finals, intermediates = {}, {}
-    for policy in ("on_change", "on_close", "every_k"):
+    for policy in ("on_change", "on_close"):
         sink = KeyedParquetSink(
             str(tmp_path / f"pol_sink_{n_buckets}_{policy}"))
         q = run_stream(
@@ -365,7 +372,7 @@ def test_emit_policies_agree_on_final_states(spark, tmp_path, n_buckets):
             str(tmp_path / f"pol_ckpt_{n_buckets}_{policy}"),
             budget=500, available_now=True, watermark="1 hour",
             session_gap_ms=day, max_files_per_trigger=1,
-            n_buckets=n_buckets, emit_policy=policy, emit_every=2)
+            n_buckets=n_buckets, emit_policy=policy)
         q.awaitTermination(300)
         all_rows = spark.read.parquet(
             *[os.path.join(sink.path, f"batch={b}")
@@ -376,13 +383,11 @@ def test_emit_policies_agree_on_final_states(spark, tmp_path, n_buckets):
                           for r in all_rows if r["final"]}
         intermediates[policy] = [r for r in all_rows if not r["final"]]
 
-    assert finals["on_change"] == finals["on_close"] == finals["every_k"]
+    assert finals["on_change"] == finals["on_close"]
     assert set(finals["on_change"]) == {"conv_a", "conv_b"}
     assert not intermediates["on_close"], \
         "on_close must skip all intermediate emissions"
-    assert len(intermediates["every_k"]) < len(
-        intermediates["on_change"]), \
-        "every_k must emit less often than on_change"
+    assert intermediates["on_change"]
 
 
 def test_merge_rows_rejects_contract_violating_turn_idx():
@@ -464,52 +469,6 @@ def _check_on_close_resume(spark, tmp_path, n_buckets):
     assert got["conv_r"][1] == 3
 
 
-def test_every_k_counts_changed_rounds_identically_across_engines(
-        spark, tmp_path):
-    """The every_k cadence is defined over CHANGED merge rounds under
-    both groupings (per-conv and bucketed). A duplicate-only delivery
-    (older ts, LWW loser -> changed=False) must not advance the cadence:
-    with emit_every=2 the single intermediate emission lands on the
-    2nd CHANGED round (n_turns=2) under both groupings, and the
-    intermediate rows are identical across them."""
-    day = 24 * 3600 * 1000
-    t0 = pd.Timestamp("2026-01-01")
-
-    src = tmp_path / "ek_src"
-    os.makedirs(src, exist_ok=True)
-    _write_chunk(src, 0, _policy_rows("conv_a", [0], t0))
-    # duplicate of turn 0 with an OLDER ts: merged away (LWW loser),
-    # changed=False -> must not count as a round
-    _write_chunk(src, 1, _policy_rows("conv_a", [0],
-                                      t0 - pd.Timedelta(minutes=5)))
-    _write_chunk(src, 2, _policy_rows("conv_a", [1],
-                                      t0 + pd.Timedelta(minutes=1)))
-    _write_chunk(src, 3, _policy_rows("conv_a", [2],
-                                      t0 + pd.Timedelta(minutes=2)))
-    _write_chunk(src, 4, _policy_rows("conv_c", [0],
-                                      t0 + pd.Timedelta(days=30)))
-
-    inter = {}
-    for label, nb in (("per-conv", None), ("bucketed", 2)):
-        sink = KeyedParquetSink(str(tmp_path / f"ek_sink_{label}"))
-        q = run_stream(
-            spark, str(src), sink, str(tmp_path / f"ek_ckpt_{label}"),
-            budget=500, available_now=True, watermark="1 hour",
-            session_gap_ms=day, max_files_per_trigger=1,
-            n_buckets=nb, emit_policy="every_k", emit_every=2)
-        q.awaitTermination(300)
-        rows = spark.read.parquet(
-            *[os.path.join(sink.path, f"batch={b}")
-              for b in sink.committed()
-              if os.path.exists(os.path.join(sink.path, f"batch={b}"))]
-        ).collect()
-        inter[label] = sorted(
-            (r["conv_id"], r["n_turns"], r["preview"])
-            for r in rows if not r["final"])
-    assert inter["per-conv"] == inter["bucketed"]
-    assert [(c, n) for c, n, _ in inter["per-conv"]] == [("conv_a", 2)]
-
-
 def test_rolling_window_hot_conv_bounded_and_batch_equal(spark, tmp_path):
     """Bounded-state rolling previews: a mega-conversation delivering
     5000 turns into ONE window must (a) keep the keep-set predicate
@@ -584,13 +543,13 @@ def test_rolling_window_tail_skew_rejected(spark, tmp_path):
 
 
 def test_render_udfs_agree_on_dense_prefix(spark):
-    """make_render_udf (complete array) and make_presampled_render_udf
-    (keep-set array + total) must render identically when the kept set
-    is exactly the sampler keep-set over the full list — the pushdown
-    exactness contract at UDF granularity."""
+    """make_presampled_render_udf (keep-set array + total) must render
+    identically to the kernel over the complete turn list when the kept
+    set is exactly the sampler keep-set over the full list — the
+    pushdown exactness contract at UDF granularity."""
+    from headson_spark.kernel.api import summarize_value
     from headson_spark.operators.sampling import default_kept_positions
-    from headson_spark.streaming.windows import (make_presampled_render_udf,
-                                                 make_render_udf)
+    from headson_spark.streaming.windows import make_presampled_render_udf
 
     budget = 300
     cap = budget // 2
@@ -605,15 +564,15 @@ def test_render_udfs_agree_on_dense_prefix(spark):
 
     struct_t = ("array<struct<turn_idx:int,role:string,text:string,"
                 "tool:string,ts:timestamp>>")
-    df = spark.createDataFrame(
-        [(turns, kept, n)],
-        f"full {struct_t}, kept {struct_t}, total int")
-    full_udf = make_render_udf(budget=budget)
+    df = spark.createDataFrame([(kept, n)], f"kept {struct_t}, total int")
     pre_udf = make_presampled_render_udf(budget=budget)
-    row = df.select(full_udf("full").alias("a"),
-                    pre_udf("kept", "total").alias("b")).first()
-    assert row["a"] == row["b"]
-    assert row["a"].startswith("{")
+    got = df.select(pre_udf("kept", "total").alias("b")).first()["b"]
+    exp = summarize_value(
+        {"turns": [{"role": t["role"], "text": t["text"],
+                    "tool": t["tool"]} for t in turns]},
+        character_budget=budget)
+    assert got == exp
+    assert got.startswith("{")
 
 
 def test_rolling_sliding_windows_consistent_keepset(spark, tmp_path):
